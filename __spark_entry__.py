@@ -8,9 +8,57 @@ operators) for the driver's DuckDB correctness gate at sf0.01.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import json
+from collections.abc import Callable, Iterable, Mapping
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+
+#: Rows whose implementation changed after their latest driver check. They
+#: rank 0, ahead of every stale row. Add a name when its spelling (or shared
+#: machinery under it) changes; remove it once a CORRECTNESS_r*.json row for
+#: the changed code is committed.
+_CHANGED_SINCE_CHECK: tuple[str, ...] = ()
+
+
+def _staleness_order(
+    names: Iterable[str], rounds: Mapping[int, Mapping[str, dict]], pins: Iterable[str]
+) -> dict[str, float]:
+    """Gate order, oldest driver evidence first: name -> rank, sorted by rank.
+
+    ``rounds`` maps a round number to that round's CORRECTNESS rows; a name
+    is checked in a round when its row's ``err`` is null or ``"no_oracle"``.
+    Pins rank 0; never-checked names 2.5 (behind the r1/r2 tranches, ahead
+    of r3+); the rest their last checked round, plus 1 once checked in two
+    or more rounds, so rows with thinner evidence go first. The sort is
+    stable: input order breaks ties.
+    """
+    last: dict[str, int] = {}
+    count: dict[str, int] = {}
+    for rnd in sorted(rounds):
+        for name, row in rounds[rnd].items():
+            if row.get("err") in (None, "no_oracle"):
+                last[name] = rnd
+                count[name] = count.get(name, 0) + 1
+    pinned = set(pins)
+
+    def rank(name: str) -> float:
+        if name in pinned:
+            return 0.0
+        if name not in last:
+            return 2.5
+        return last[name] + (1.0 if count[name] >= 2 else 0.0)
+
+    return {name: rank(name) for name in sorted(names, key=rank)}
+
+
+def _driver_rounds() -> dict[int, dict[str, dict]]:
+    """The committed CORRECTNESS_rNN.json files next to this module, by round."""
+    here = Path(__file__).resolve().parent
+    return {
+        int(path.stem.removeprefix("CORRECTNESS_r")): json.loads(path.read_text())
+        for path in here.glob("CORRECTNESS_r[0-9][0-9].json")
+    }
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -21,10 +69,13 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
+    """One entry per implemented operator from SURVEY.md §2, in staleness
+    order: the driver checks the first 50 each round."""
     from datafusion_gpu_spark.queries import all_queries
 
-    return all_queries()
+    registry = all_queries()
+    order = _staleness_order(registry, _driver_rounds(), _CHANGED_SINCE_CHECK)
+    return {name: registry[name] for name in order}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -99,9 +99,9 @@ def configure_s3a(
 ) -> None:
     """Object-store access (SURVEY §2.1 row 8): Spark reads ``s3a://…``
     through the Hadoop S3A connector; this sets the per-session Hadoop
-    conf. Untestable in this offline container (no network, no S3 jars on
-    the classpath) — on a real cluster the hadoop-aws bundle ships with
-    the distribution and every reader/sink in this module accepts
+    conf; each key is written only when its argument is set. Reading
+    through it needs the hadoop-aws bundle, which a real cluster ships
+    with the distribution; every reader/sink in this module then accepts
     ``s3a://bucket/prefix`` paths unchanged.
     """
     hconf = spark.sparkContext._jsc.hadoopConfiguration()

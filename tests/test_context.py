@@ -103,57 +103,75 @@ def test_scan_cache_sweeps_stopped_sessions_and_clear_hook():
         ctx._SCAN_CACHE.pop(id(live), None)
 
 
+def _driver_evidence(rounds):
+    """name -> last checked round, name -> number of checked rounds,
+    computed from CORRECTNESS rows independently of __spark_entry__."""
+    last, count = {}, {}
+    for rnd in sorted(rounds):
+        for name, row in rounds[rnd].items():
+            if row["err"] in (None, "no_oracle"):
+                last[name] = rnd
+                count[name] = count.get(name, 0) + 1
+    return last, count
+
+
+#: The six rows pinned for the round-16 driver sample (their machinery
+#: changed in the r16 optimization round, after their r15 check).
+_R16_PINS = (
+    "events_cox_ph", "graph_hits", "dedup_minhash_lsh",
+    "dedup_components", "graph_mst", "graph_louvain",
+)
+
+
+def _rounds_through(n):
+    from __spark_entry__ import _driver_rounds
+
+    return {r: rows for r, rows in _driver_rounds().items() if r <= n}
+
+
 def test_gate_staleness_rotation_orders_oldest_first():
     # the driver checks the FIRST 50 registry entries each round; with
-    # coverage closed (r5), ordering is a staleness rotation — the rank
-    # of each query's last driver check must be non-decreasing along
-    # the registry, with never-checked entries slotted between the r2
-    # and r3 tranches (first-check latency <= one round behind the
-    # stalest re-checks, never ahead of them)
-    from datafusion_gpu_spark.queries import (
+    # coverage closed (r5), ordering is a staleness rotation derived from
+    # the committed CORRECTNESS_r*.json files — the rank of each query's
+    # last driver check must be non-decreasing along the registry, with
+    # never-checked entries slotted between the r2 and r3 tranches
+    # (first-check latency <= one round behind the stalest re-checks,
+    # never ahead of them)
+    from __spark_entry__ import (
         _CHANGED_SINCE_CHECK,
-        _CHECK_COUNT,
-        _LAST_DRIVER_ROUND,
-        _NEVER_CHECKED_RANK,
-        _TIER_BONUS,
-        _TIER_CHECKS,
-        _staleness_rank,
-        all_oracles,
-        all_queries,
+        _driver_rounds,
+        _staleness_order,
+        oracle_sql,
+        queries,
     )
+    from datafusion_gpu_spark.queries import all_queries
 
-    names = list(all_queries())
-    rank = _staleness_rank
-    ranks = [rank(n) for n in names]
+    last, count = _driver_evidence(_driver_rounds())
+    order = _staleness_order(all_queries(), _driver_rounds(), _CHANGED_SINCE_CHECK)
+    names = list(queries())
+    assert names == list(order)
+    ranks = [order[n] for n in names]
     assert ranks == sorted(ranks)
     # evidence tier (gate-slot economics, VERDICT r12 #6): a row green in
-    # >= _TIER_CHECKS distinct rounds ages _TIER_BONUS slower than a
-    # same-round row with thinner evidence; pins still outrank everything
+    # >= 2 distinct rounds ages 1 round slower than a same-round row with
+    # thinner evidence; pins still outrank everything
     for n in names:
         if n in _CHANGED_SINCE_CHECK:
-            assert rank(n) == 0.0
-        elif n in _LAST_DRIVER_ROUND:
-            want = _LAST_DRIVER_ROUND[n] + (
-                _TIER_BONUS if _CHECK_COUNT[n] >= _TIER_CHECKS else 0.0
-            )
-            assert rank(n) == want
-    # concrete instance: join_cross (green r2 AND r7) defers behind
-    # agg_gini (green r7 only) although both were last checked in r7
-    assert _CHECK_COUNT["join_cross"] >= _TIER_CHECKS
-    assert _CHECK_COUNT["agg_gini"] == 1
-    assert _LAST_DRIVER_ROUND["join_cross"] == _LAST_DRIVER_ROUND["agg_gini"]
-    assert rank("join_cross") > rank("agg_gini")
+            assert order[n] == 0.0
+        elif n in last:
+            assert order[n] == last[n] + (1.0 if count[n] >= 2 else 0.0)
+        else:
+            assert order[n] == 2.5
     # changed-code rows (spelling or shared machinery changed after their
     # last driver check — VERDICT r10 #1) jump the staleness queue: ALL of
     # them sit inside the gate head, ahead of every merely-stale tranche
     assert set(names[: len(_CHANGED_SINCE_CHECK)]) == set(_CHANGED_SINCE_CHECK)
     assert len(_CHANGED_SINCE_CHECK) <= 50
     # The head's 50 slots must be exactly the 50 smallest staleness
-    # ranks — derived from the rank table itself so the assertion stays
-    # true as _CHECKED_R{N} tuples accrue. Sortedness above already
-    # guarantees the cut; here we pin the head *composition*: for every
-    # rank r fully inside the head, ALL entries of that rank are in the
-    # head; the boundary rank fills the remainder in registry order.
+    # ranks. Sortedness above already guarantees the cut; here we pin the
+    # head *composition*: for every rank r fully inside the head, ALL
+    # entries of that rank are in the head; the boundary rank fills the
+    # remainder in registry order.
     head_ranks = ranks[:50]
     from collections import Counter
 
@@ -167,15 +185,63 @@ def test_gate_staleness_rotation_orders_oldest_first():
     # sort between the r2 and r3 tranches — any overflow past the head
     # queues immediately after it, ahead of every staler-than-2.5
     # re-check, bounding first-check latency at one extra round
-    n_never = total_by_rank.get(_NEVER_CHECKED_RANK, 0)
-    n_never_in_head = head_by_rank.get(_NEVER_CHECKED_RANK, 0)
+    n_never = total_by_rank.get(2.5, 0)
+    n_never_in_head = head_by_rank.get(2.5, 0)
     if n_never_in_head < n_never:
         overflow = names[50 : 50 + (n_never - n_never_in_head)]
-        assert all(n not in _LAST_DRIVER_ROUND for n in overflow)
+        assert all(n not in last for n in overflow)
     # every query has an oracle unless deliberately rows-only (driver
     # looks oracles up by key, so only membership matters, not order)
     rows_only = {"explain_plan", "agg_approximate"}
-    assert set(names) - set(all_oracles()) == rows_only
+    assert set(names) - set(oracle_sql()) == rows_only
+
+
+def test_staleness_order_golden_r16_sample():
+    # Golden: rounds r01-r15 plus the six pins of that time reproduce the
+    # driver's actual round-16 sample — CORRECTNESS_r16.json's 50 rows,
+    # in order — which the hand-kept rank tables used to produce.
+    from __spark_entry__ import _driver_rounds, _staleness_order
+    from datafusion_gpu_spark.queries import all_queries
+
+    r15 = _rounds_through(15)
+    order = _staleness_order(all_queries(), r15, _R16_PINS)
+    assert list(order)[:50] == list(_driver_rounds()[16])
+    # r03's errored row is not a check; r13's hash mismatches are
+    assert r15[3]["sim_quantize_int8"]["err"]
+    assert _staleness_order(["sim_quantize_int8"], _rounds_through(3), ()) == {
+        "sim_quantize_int8": 2.5
+    }
+    mismatched = ["graph_modularity", "agg_bh_fdr"]
+    assert all(r15[13][n]["hash_match"] is False for n in mismatched)
+    assert _staleness_order(mismatched, _rounds_through(13), ()) == dict.fromkeys(
+        mismatched, 13.0
+    )
+    # concrete tier instance: join_cross (green r2 AND r7) defers behind
+    # agg_gini (green r7 only) although both were last checked in r7
+    last, count = _driver_evidence(r15)
+    assert count["join_cross"] >= 2
+    assert count["agg_gini"] == 1
+    assert last["join_cross"] == last["agg_gini"]
+    assert order["join_cross"] > order["agg_gini"]
+
+
+def test_staleness_order_later_round_moves_name_back():
+    # A later driver round needs no code edit: a name checked in it
+    # leaves the head for the back of the queue; an errored row in the
+    # same round is not a check and moves nothing.
+    from __spark_entry__ import _staleness_order
+    from datafusion_gpu_spark.queries import all_queries
+
+    registry = all_queries()
+    rounds = _rounds_through(15)
+    before = list(_staleness_order(registry, rounds, ()))
+    checked, errored = before[0], before[1]
+    rounds[16] = {checked: {"err": None}, errored: {"err": "spark raised"}}
+    after = _staleness_order(registry, rounds, ())
+    assert list(after)[-1] == checked
+    assert after[checked] == max(after.values())
+    assert list(after)[0] == errored
+    assert [n for n in after if n != checked] == [n for n in before if n != checked]
 
 
 def test_family_reexport_collision_raises():

@@ -151,7 +151,10 @@ def test_connected_components_label_broadcast_guard(spark, tmp_path, monkeypatch
         assert "BroadcastHashJoin" in stats2["round1_plan"]
         assert "SortMergeJoin" not in stats2["round1_plan"]
     finally:
+        # a failed clear must fail here, not silently switch every later
+        # truncator in the suite to reliable checkpoints
         sc._jsc.sc().setCheckpointDir(None)
+        assert not sc.getCheckpointDir()
 
 
 def test_connected_components_collapse_transitive_chain(spark):

@@ -343,3 +343,46 @@ def test_parquet_zstd_codec_reaches_files(spark):
     back = spark.read.parquet(out)
     assert back.count() == 1000
     assert back.agg({"dbl": "sum"}).collect()[0][0] == 999 * 1000
+
+
+def test_configure_s3a_sets_only_the_given_keys(spark):
+    # Object-store surface (COVERAGE.md row 8). configure_s3a only writes
+    # per-session Hadoop conf, so it is checkable offline: each fs.s3a.*
+    # key is written when its argument is set and left alone otherwise.
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    keys = {
+        "endpoint": "fs.s3a.endpoint",
+        "access_key": "fs.s3a.access.key",
+        "secret_key": "fs.s3a.secret.key",
+        "path_style": "fs.s3a.path.style.access",
+    }
+    given = {
+        "endpoint": "https://objects.example.invalid",
+        "access_key": "test-access",
+        "secret_key": "test-secret",
+        "path_style": True,
+    }
+    written = {**given, "path_style": "true"}
+    saved = {key: hconf.get(key) for key in keys.values()}
+
+    def current():
+        return {arg: hconf.get(key) for arg, key in keys.items()}
+
+    try:
+        for arg in keys:
+            for key in keys.values():
+                hconf.set(key, "untouched")
+            io.configure_s3a(spark)
+            assert current() == dict.fromkeys(keys, "untouched")
+            io.configure_s3a(spark, **{arg: given[arg]})
+            want = dict.fromkeys(keys, "untouched")
+            want[arg] = written[arg]
+            assert current() == want
+        io.configure_s3a(spark, **given)
+        assert current() == written
+    finally:
+        for key, value in saved.items():
+            if value is None:
+                hconf.unset(key)
+            else:
+                hconf.set(key, value)

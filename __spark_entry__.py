@@ -18,7 +18,31 @@ from pyspark.sql import DataFrame, SparkSession
 #: rank 0, ahead of every stale row. Add a name when its spelling (or shared
 #: machinery under it) changes; remove it once a CORRECTNESS_r*.json row for
 #: the changed code is committed.
-_CHANGED_SINCE_CHECK: tuple[str, ...] = ()
+_CHANGED_SINCE_CHECK: tuple[str, ...] = (
+    "dedup_components",
+    "graph_assortativity",
+    "graph_bellman_ford",
+    "graph_bfs",
+    "graph_clustering_coeff",
+    "graph_common_neighbors",
+    "graph_condensation",
+    "graph_degree_hist",
+    "graph_delta_stepping",
+    "graph_harmonic_exact",
+    "graph_harmonic_hyperball",
+    "graph_hits",
+    "graph_kcore",
+    "graph_label_propagation",
+    "graph_louvain",
+    "graph_modularity",
+    "graph_mst",
+    "graph_pagerank",
+    "graph_pagerank_personalized",
+    "graph_resource_allocation",
+    "graph_scc",
+    "graph_toposort",
+    "graph_triangle_count",
+)
 
 
 def _staleness_order(

@@ -20,10 +20,10 @@ Pipeline shapes:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from datafusion_gpu_spark.operators import util
 
 # -- normalization / shingling ----------------------------------------------
 
@@ -1041,6 +1041,10 @@ def semantic_dedup(
 
 # -- duplicate-cluster resolution -------------------------------------------
 
+#: connected_components' cluster-path label broadcast guard, in nodes
+#: (~16 B/row framed: 4M nodes ~ 64 MB of broadcast)
+_CC_BROADCAST_MAX_NODES = 4_000_000
+
 
 def connected_components(
     pairs: DataFrame,
@@ -1087,11 +1091,7 @@ def connected_components(
     """
     sc = pairs.sparkSession.sparkContext
     use_reliable = bool(sc.getCheckpointDir())
-    cut = (
-        (lambda df: df.checkpoint(eager=True))
-        if use_reliable
-        else (lambda df: df.localCheckpoint(eager=True))
-    )
+    cut = util.lineage_truncator(sc)
     fwd = pairs.select(
         F.col(a).cast("long").alias("src"), F.col(b).cast("long").alias("dst")
     )
@@ -1130,13 +1130,10 @@ def connected_components(
     # only after BOTH map stages materialize — i.e. the |E| edge side
     # pays a full shuffle write EVERY round before the planner can see
     # the small label side — so there the explicit hint (guarded: |V|
-    # must fit the broadcast budget, ~16 B/row; 0 disables) removes a
-    # data-sized write per round. One count() job prices the cluster
-    # guard against the checkpointed label RDD.
-    bc_max = int(
-        os.environ.get("SPARK_GRAFT_CC_BROADCAST_MAX_NODES", "4000000")
-    )
-    bcast = use_reliable and 0 < bc_max and labels.count() <= bc_max
+    # must fit _CC_BROADCAST_MAX_NODES) removes a data-sized write per
+    # round. One count() job prices the cluster guard against the
+    # checkpointed label RDD.
+    bcast = use_reliable and labels.count() <= _CC_BROADCAST_MAX_NODES
     # Convergence via the label-sum invariant: hash-min only ever LOWERS
     # a node's label, so sum(component) is strictly decreasing until the
     # fixpoint — an unchanged sum proves convergence with one cheap

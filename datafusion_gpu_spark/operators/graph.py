@@ -1,40 +1,158 @@
-"""Iterative graph analytics beyond connected components: PageRank.
+"""Graph analytics over edge-list DataFrames: centrality (PageRank,
+HITS, harmonic), distances (BFS, Bellman-Ford, delta-stepping),
+communities (Louvain, label propagation, modularity), structure
+(triangles, k-core, SCC, topological layers, MST) and link prediction.
 
 Training-data pipelines use link-graph centrality as a document-quality
 prior (the CommonCrawl crawl frontier is harmonic-centrality ranked, and
 "quality weighting by inlink authority" is a standard corpus-curation
 signal). Connected components (dedup.connected_components) answers
-"which docs are the same"; PageRank answers "which nodes matter".
+"which docs are the same"; this module answers "which nodes matter" and
+"how is the graph shaped".
 
-Spark-first shape, same contract as the components operator:
+Every operator takes its edges as two endpoint columns (plus a weight
+for the weighted ones) and first reduces them to one of these formats,
+each built by one helper below:
 
-- the deduped edge list and the node/out-degree relation are each
-  materialized ONCE (two setup jobs total: one edge distinct, one
-  shuffle producing both the node set and out-degrees) and reused by
-  all iterations — per-round cost is one equality join on ``src`` plus
-  one hash aggregation on ``dst``, both O(|E|) at most;
-- iteration count is FIXED (power iteration to a chosen depth), so
-  lineage depth is bounded; each round still truncates lineage via
-  checkpoint (cluster: ``setCheckpointDir`` -> fault-tolerant
-  ``checkpoint``; local mode: ``localCheckpoint``) so the plan never
-  re-derives prior rounds;
-- no driver-side data: the only collect in the operator is none at all —
-  the node count feeds the teleport term as a broadcast one-row join.
+- ``_canonical``  — undirected ``(lo, hi)``: ``lo < hi``, self-loops
+  dropped, distinct; one row per undirected edge;
+- ``_symmetric``  — undirected ``(s, d[, w])``: every edge in both
+  directions, self-loops dropped, distinct; ``_both_ways`` spells the
+  same two-way relation from an already canonical set;
+- ``_directed``   — directed ``(s, d)``: self-loops dropped, distinct;
+- ``_degree``     — ``(node, <name>)`` undirected degree of a canonical
+  set; ``_endpoints`` — the ``(node)`` set of any edge relation;
+- ``_keep_edges`` — the edges whose two endpoints both survive in a
+  ``(node)`` relation (the two-sided semi-join of the peeling loops).
 
-Dangling nodes (no out-edges) support both standard treatments:
-``dangling="leak"`` (the default the gate's chained-CTE oracle replays
-exactly — mass leaks each round) and ``dangling="redistribute"`` (the
-textbook correction: each round the dangling mass is spread uniformly,
-computed as one extra one-row broadcast aggregate per round, never a
-driver collect; total mass then stays exactly 1.0 every round —
-pinned against a numpy reference in tests).
+Two exceptions keep their own spelling: ``louvain`` and ``boruvka_mst``
+build a weighted canonical form (parallel edges merge by SUM of weight
+in one and by MIN in the other), and the PageRank pair and ``hits``
+dedup the directed ``(src, dst)`` list as given, self-links included
+(a self-link is a real out-edge there).
+
+Iterative operators cut lineage with ``util.lineage_truncator``
+(reliable ``checkpoint`` with a checkpoint dir configured, the cluster
+spelling; ``localCheckpoint`` otherwise), so a round never re-derives
+the rounds before it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import functools
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from datafusion_gpu_spark.operators import util
+from datafusion_gpu_spark.operators.dedup import connected_components
+
+
+def _canonical(edges: DataFrame, a: str, b: str) -> DataFrame:
+    """Undirected ``(lo, hi)`` with ``lo < hi``, self-loops dropped, distinct."""
+    lo = F.least(F.col(a), F.col(b)).alias("lo")
+    hi = F.greatest(F.col(a), F.col(b)).alias("hi")
+    return edges.select(lo, hi).where(F.col("lo") != F.col("hi")).distinct()
+
+
+def _symmetric(edges: DataFrame, a: str, b: str, w: str | None = None) -> DataFrame:
+    """Undirected ``(s, d[, w])`` in both directions, self-loops dropped,
+    distinct."""
+    wcol = [F.col(w).alias("w")] if w else []
+    fwd = edges.select(F.col(a).alias("s"), F.col(b).alias("d"), *wcol)
+    rev = edges.select(F.col(b).alias("s"), F.col(a).alias("d"), *wcol)
+    return fwd.unionAll(rev).where(F.col("s") != F.col("d")).distinct()
+
+
+def _both_ways(und: DataFrame, s: str, d: str) -> DataFrame:
+    """Both orientations ``(s, d)`` of a canonical ``(lo, hi)`` set — it is
+    already distinct and loop-free, so no dedup shuffle."""
+    return und.select(F.col("lo").alias(s), F.col("hi").alias(d)).unionAll(
+        und.select(F.col("hi").alias(s), F.col("lo").alias(d))
+    )
+
+
+def _directed(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Directed ``(s, d)``, self-loops dropped, distinct."""
+    return (
+        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+        .where(F.col("s") != F.col("d"))
+        .distinct()
+    )
+
+
+def _ends(e: DataFrame, s: str, d: str) -> DataFrame:
+    """``(node)`` once per edge end of ``e``."""
+    return e.select(F.col(s).alias("node")).unionAll(e.select(F.col(d).alias("node")))
+
+
+def _endpoints(e: DataFrame, s: str, d: str) -> DataFrame:
+    """The ``(node)`` set of ``e``."""
+    return _ends(e, s, d).distinct()
+
+
+def _degree(und: DataFrame, name: str) -> DataFrame:
+    """``(node, <name>)`` undirected degree of a canonical ``(lo, hi)`` set."""
+    return (
+        _ends(und, "lo", "hi").groupBy("node").agg(F.count(F.lit(1)).alias(name))
+    )
+
+
+def _keep_edges(e: DataFrame, nodes: DataFrame, s: str, d: str) -> DataFrame:
+    """The edges of ``e`` whose ``s`` and ``d`` are both in ``(node)``."""
+    return e.join(nodes.withColumnRenamed("node", s), s, "left_semi").join(
+        nodes.withColumnRenamed("node", d), d, "left_semi"
+    )
+
+
+def _seed_nodes(seeds: DataFrame) -> DataFrame:
+    """The distinct ``(node)`` set of a one-column seed relation."""
+    return seeds.select(F.col(seeds.columns[0]).alias("node")).distinct()
+
+
+def _pagerank_edges(
+    edges: DataFrame, src: str, dst: str, ckpt: Callable[[DataFrame], DataFrame]
+) -> tuple[DataFrame, DataFrame]:
+    """PageRank setup, TWO materializations: the deduped directed edge
+    list ``(src, dst)``, then one shuffle that yields BOTH the node set
+    and the out-degrees ``(node, outdeg)`` (sources contribute 1,
+    destinations 0 — every endpoint appears). The 1/outdeg edge weight
+    never materializes as an O(|E|) table: it rides the |V|-row rank
+    relation into each round's join instead (:func:`_pagerank_contribs`)."""
+    e = ckpt(
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
+    )
+    nodes_deg = ckpt(
+        e.select(F.col("src").alias("node"), F.lit(1).alias("out"))
+        .unionAll(e.select(F.col("dst").alias("node"), F.lit(0).alias("out")))
+        .groupBy("node")
+        .agg(F.sum("out").cast("double").alias("outdeg"))
+    )
+    return e, nodes_deg
+
+
+def _pagerank_contribs(
+    e: DataFrame,
+    nodes_deg: DataFrame,
+    ranks: DataFrame,
+    bcast: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """One power-iteration round's ``(dst, contrib)``: SUM over u->dst of
+    rank(u)/outdeg(u). rank/outdeg is folded on the |V|-row side;
+    dst-only nodes (outdeg 0) can never match an e.src, so dropping them
+    just shrinks the (``bcast``-wrapped) rank side of the edge join."""
+    rank_w = (
+        ranks.join(nodes_deg, "node")
+        .where(F.col("outdeg") > 0)
+        .select("node", (F.col("rank") / F.col("outdeg")).alias("rw"))
+    )
+    return (
+        e.join(bcast(rank_w), e["src"] == rank_w["node"])
+        .groupBy("dst")
+        .agg(F.sum("rw").alias("contrib"))
+    )
 
 
 def pagerank(
@@ -52,11 +170,17 @@ def pagerank(
     rank_0(v)   = 1 / N
     rank_i+1(v) = (1 - d) / N + d * SUM over u->v of rank_i(u) / outdeg(u)
 
-    Each round folds ``rank(u)/outdeg(u)`` into the |V|-row rank
-    relation (no O(|E|) weighted-edge table ever materializes), joins it
-    onto the deduped edges and hash-aggregates on ``dst`` with map-side
-    partial sums — a celebrity node costs one partial row per upstream
-    partition, not a single-reducer hot key.
+    The deduped edge list and the node/out-degree relation are each
+    materialized ONCE (two setup jobs, :func:`_pagerank_edges`) and
+    reused by all iterations. Each round folds ``rank(u)/outdeg(u)``
+    into the |V|-row rank relation (no O(|E|) weighted-edge table ever
+    materializes), joins it onto the deduped edges and hash-aggregates
+    on ``dst`` with map-side partial sums — a celebrity node costs one
+    partial row per upstream partition, not a single-reducer hot key.
+    Iteration count is FIXED (power iteration to a chosen depth) and
+    each round is checkpoint-truncated, so the plan never re-derives
+    prior rounds. No driver-side data: the node count feeds the
+    teleport term as a broadcast one-row join.
 
     ``broadcast_ranks`` (default True) broadcasts the |V|-row rank
     vector into the edge join, so the O(|E|) edge table is NEVER
@@ -65,47 +189,30 @@ def pagerank(
     that, pass False: both sides hash-shuffle on the node key and the
     edge side's exchange is reused across rounds by AQE where possible
     (the classic co-partitioned PageRank).
-    """
-    from datafusion_gpu_spark.operators.util import lineage_truncator
 
-    ckpt = lineage_truncator(edges.sparkSession.sparkContext)
-    # setup is TWO materializations (was three): the deduped edge list,
-    # then one shuffle that yields BOTH the node set and the out-degrees
-    # (sources contribute 1, destinations 0 — every endpoint appears).
-    # The 1/outdeg edge weight never materializes as an O(|E|) table:
-    # it rides the |V|-row rank relation into each round's join instead.
-    e = ckpt(
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    )
-    nodes_deg = ckpt(
-        e.select(F.col("src").alias("node"), F.lit(1).alias("out"))
-        .unionAll(e.select(F.col("dst").alias("node"), F.lit(0).alias("out")))
-        .groupBy("node")
-        .agg(F.sum("out").cast("double").alias("outdeg"))
-    )
+    Dangling nodes (no out-edges) support both standard treatments:
+    ``dangling="leak"`` (the default the gate's chained-CTE oracle
+    replays exactly — mass leaks each round) and
+    ``dangling="redistribute"`` (the textbook correction: each round the
+    dangling mass is spread uniformly, computed as one extra one-row
+    broadcast aggregate per round, never a driver collect; total mass
+    then stays exactly 1.0 every round — pinned against a numpy
+    reference in tests). Any other value raises ValueError before any
+    Spark job runs.
+    """
+    if dangling not in ("leak", "redistribute"):
+        raise ValueError("dangling must be 'leak' or 'redistribute'")
+    ckpt = util.lineage_truncator(edges.sparkSession.sparkContext)
+    e, nodes_deg = _pagerank_edges(edges, src, dst, ckpt)
     nodes = nodes_deg.select("node")
     # one-row broadcast with the teleport constants — no driver collect
     n_row = F.broadcast(nodes.agg(F.count(F.lit(1)).cast("double").alias("n")))
     ranks = nodes.crossJoin(n_row).select(
         "node", (F.lit(1.0) / F.col("n")).alias("rank")
     )
-    if dangling not in ("leak", "redistribute"):
-        raise ValueError("dangling must be 'leak' or 'redistribute'")
     maybe_bcast = F.broadcast if broadcast_ranks else (lambda df: df)
     for _ in range(iterations):
-        # rank(u)/outdeg(u) on the |V|-row side; dst-only nodes (outdeg
-        # 0) can never match an e.src, so dropping them just shrinks the
-        # broadcast
-        rank_w = (
-            ranks.join(nodes_deg, "node")
-            .where(F.col("outdeg") > 0)
-            .select("node", (F.col("rank") / F.col("outdeg")).alias("rw"))
-        )
-        contribs = (
-            e.join(maybe_bcast(rank_w), e["src"] == rank_w["node"])
-            .groupBy("dst")
-            .agg(F.sum("rw").alias("contrib"))
-        )
+        contribs = _pagerank_contribs(e, nodes_deg, ranks, maybe_bcast)
         nxt = nodes.join(
             maybe_bcast(contribs), nodes["node"] == contribs["dst"], "left"
         ).crossJoin(n_row)
@@ -135,6 +242,115 @@ def pagerank(
     return ranks
 
 
+def _closed_triangles(edges: DataFrame, a: str, b: str) -> tuple[DataFrame, DataFrame]:
+    """``(closed, deg)``: every triangle once, as the closed wedge
+    ``(v, w, u)`` at its lowest corner of the degree-ordered orientation
+    (:func:`triangle_count`), plus the undirected degree ``(node, deg)``.
+    The canonical edge set is materialized once (the degree aggregation
+    and the orientation join both read it), and so is the oriented edge
+    set (both wedge legs and the closing probe read it)."""
+    ckpt = util.lineage_truncator(edges.sparkSession.sparkContext)
+    und = ckpt(_canonical(edges, a, b))
+    deg = _degree(und, "deg")
+    dl = deg.select(F.col("node").alias("lo"), F.col("deg").alias("deg_lo"))
+    dh = deg.select(F.col("node").alias("hi"), F.col("deg").alias("deg_hi"))
+    # orient from the (deg, id)-smaller endpoint to the larger
+    lo_first = (F.col("deg_lo") < F.col("deg_hi")) | (
+        (F.col("deg_lo") == F.col("deg_hi")) & (F.col("lo") < F.col("hi"))
+    )
+    oriented = ckpt(
+        und.join(dl, "lo")
+        .join(dh, "hi")
+        .select(
+            F.when(lo_first, F.col("lo")).otherwise(F.col("hi")).alias("u"),
+            F.when(lo_first, F.col("hi")).otherwise(F.col("lo")).alias("v"),
+        )
+    )
+    # wedges u->v, u->w (v before w in the orientation order) closed by
+    # an oriented edge v->w
+    e1 = oriented.select(F.col("u"), F.col("v"))
+    e2 = oriented.select(F.col("u").alias("u2"), F.col("v").alias("w"))
+    wedges = (
+        e1.join(e2, e1["u"] == e2["u2"])
+        .where(F.col("v") != F.col("w"))
+        .select("u", "v", "w")
+    )
+    closing = oriented.select(F.col("u").alias("v"), F.col("v").alias("w"))
+    return wedges.join(closing, ["v", "w"], "inner"), deg
+
+
+def _capped_wedges(
+    edges: DataFrame,
+    a: str,
+    b: str,
+    max_degree: int,
+    min_common: int,
+    mid_cols: tuple[Column, ...] = (),
+    aggs: tuple[Column, ...] = (),
+) -> tuple[DataFrame, DataFrame]:
+    """``(pairs, deg)`` for the neighborhood-overlap link predictors:
+    ``pairs`` is every NON-adjacent ``(x, y)``, ``x < y``, with at least
+    ``min_common`` common neighbors among the middles of degree <=
+    ``max_degree``, carrying ``common`` plus ``aggs`` over its wedges;
+    ``deg`` is the FULL degree ``(mid, deg)``. ``mid_cols`` are per-middle
+    columns computed on ``deg`` that every wedge carries into ``aggs``.
+
+    The canonical edge set (two wedge legs, the degree aggregation, the
+    anti-join) and the degree relation are each materialized once; the
+    capped middle set is broadcast into the wedge generation."""
+    ckpt = util.lineage_truncator(edges.sparkSession.sparkContext)
+    und = ckpt(_canonical(edges, a, b))
+    adj = _both_ways(und, "mid", "nbr")
+    deg = ckpt(adj.groupBy("mid").agg(F.count(F.lit(1)).alias("deg")))
+    small_mid = adj.join(
+        F.broadcast(deg.where(F.col("deg") <= max_degree).select("mid", *mid_cols)),
+        "mid",
+    )
+    x = small_mid.withColumnRenamed("nbr", "x")
+    y = small_mid.select(F.col("mid").alias("mid2"), F.col("nbr").alias("y"))
+    pairs = (
+        x.join(y, x["mid"] == y["mid2"])
+        .where(F.col("x") < F.col("y"))
+        .groupBy("x", "y")
+        .agg(F.count(F.lit(1)).alias("common"), *aggs)
+        .where(F.col("common") >= min_common)
+    )
+    # drop already-linked pairs
+    pairs = pairs.join(
+        und, (pairs["x"] == und["lo"]) & (pairs["y"] == und["hi"]), "left_anti"
+    )
+    return pairs, deg
+
+
+def _frontier_bfs(
+    adj: DataFrame,
+    visited: DataFrame,
+    keys: list[str],
+    rounds: int,
+    ckpt: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """Frontier BFS over the two-way adjacency ``(s, d)`` from
+    ``visited`` = ``(*keys, dist)`` (the dist-0 start rows), ``keys``
+    ending in ``"node"`` (``["node"]``, or ``["src", "node"]`` to carry
+    a source tag). Each round expands the CURRENT frontier with one
+    equality join, anti-joins the visited set and checkpoints both; an
+    empty frontier ends the loop early. Returns ``(*keys, dist)``."""
+    frontier = visited.select(*keys)
+    for depth in range(1, rounds + 1):
+        nxt = ckpt(
+            adj.join(frontier.withColumnRenamed("node", "s"), "s")
+            .select(*keys[:-1], F.col("d").alias("node"))
+            .distinct()
+            .join(visited, keys, "left_anti")
+            .withColumn("dist", F.lit(depth))
+        )
+        if nxt.isEmpty():
+            break
+        visited = ckpt(visited.unionAll(nxt))
+        frontier = nxt.select(*keys)
+    return visited
+
+
 def triangle_count(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
     """Global triangle count of the UNDIRECTED graph given as a pair
     stream (either orientation, self-loops and duplicates tolerated).
@@ -160,51 +376,7 @@ def triangle_count(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
     re-derives the whole dedup + degree-join chain per consumer (audited:
     32 shuffles instead of ~7 on the co-purchase gate graph).
     """
-    from datafusion_gpu_spark.operators.util import lineage_truncator
-
-    ckpt = lineage_truncator(edges.sparkSession.sparkContext)
-    # canonical undirected edge set (lo, hi), self-loops dropped —
-    # materialized once: both the degree aggregation and the orientation
-    # join read it
-    lo = F.least(F.col(a), F.col(b)).alias("lo")
-    hi = F.greatest(F.col(a), F.col(b)).alias("hi")
-    und = ckpt(
-        edges.select(lo, hi).where(F.col("lo") != F.col("hi")).distinct()
-    )
-    # undirected degree: every endpoint appears once per distinct edge
-    deg = (
-        und.select(F.col("lo").alias("node"))
-        .unionAll(und.select(F.col("hi").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    dl = deg.select(
-        F.col("node").alias("lo"), F.col("deg").alias("deg_lo")
-    )
-    dh = deg.select(
-        F.col("node").alias("hi"), F.col("deg").alias("deg_hi")
-    )
-    # orient from the (deg, id)-smaller endpoint to the larger
-    lo_first = (F.col("deg_lo") < F.col("deg_hi")) | (
-        (F.col("deg_lo") == F.col("deg_hi")) & (F.col("lo") < F.col("hi"))
-    )
-    oriented = ckpt(
-        und.join(dl, "lo")
-        .join(dh, "hi")
-        .select(
-            F.when(lo_first, F.col("lo")).otherwise(F.col("hi")).alias("u"),
-            F.when(lo_first, F.col("hi")).otherwise(F.col("lo")).alias("v"),
-        )
-    )
-    # wedges u->v, u->w (v before w in the orientation order) closed by
-    # an oriented edge v->w
-    e1 = oriented.select(F.col("u"), F.col("v"))
-    e2 = oriented.select(F.col("u").alias("u2"), F.col("v").alias("w"))
-    wedges = e1.join(e2, e1["u"] == e2["u2"]).where(F.col("v") != F.col("w")).select("v", "w")
-    closing = oriented.select(
-        F.col("u").alias("v"), F.col("v").alias("w")
-    )
-    closed = wedges.join(closing, ["v", "w"], "inner")
+    closed, _ = _closed_triangles(edges, a, b)
     # each triangle {x<y<z} closes exactly once: its corner-x wedge
     # emits (y,z) AND (z,y), but the orientation is a DAG so only y->z
     # exists as a closing edge — no double counting to correct
@@ -246,34 +418,8 @@ def common_neighbors(
     vs 6 shuffles + 1 SMJ with the cut). The degree relation is |V|
     rows and broadcast into the cap filter and the Jaccard projection.
     """
-    from datafusion_gpu_spark.operators.util import lineage_truncator
-
-    ckpt = lineage_truncator(edges.sparkSession.sparkContext)
-    lo = F.least(F.col(a), F.col(b)).alias("lo")
-    hi = F.greatest(F.col(a), F.col(b)).alias("hi")
-    und = ckpt(
-        edges.select(lo, hi).where(F.col("lo") != F.col("hi")).distinct()
-    )
-    adj = und.select(
-        F.col("lo").alias("mid"), F.col("hi").alias("nbr")
-    ).unionAll(und.select(F.col("hi").alias("mid"), F.col("lo").alias("nbr")))
-    deg = ckpt(adj.groupBy("mid").agg(F.count(F.lit(1)).alias("deg")))
-    small_mid = adj.join(
-        F.broadcast(deg.where(F.col("deg") <= max_degree).select("mid")), "mid"
-    )
-    x = small_mid.select("mid", F.col("nbr").alias("x"))
-    y = small_mid.select(F.col("mid").alias("mid2"), F.col("nbr").alias("y"))
-    pairs = (
-        x.join(y, x["mid"] == y["mid2"])
-        .where(F.col("x") < F.col("y"))
-        .groupBy("x", "y")
-        .agg(F.count(F.lit(1)).alias("common"))
-        .where(F.col("common") >= min_common)
-    )
-    # drop already-linked pairs; attach full degrees for the Jaccard
-    pairs = pairs.join(
-        und, (pairs["x"] == und["lo"]) & (pairs["y"] == und["hi"]), "left_anti"
-    )
+    pairs, deg = _capped_wedges(edges, a, b, max_degree, min_common)
+    # attach full degrees for the Jaccard
     dx = deg.select(F.col("mid").alias("x"), F.col("deg").alias("deg_x"))
     dy = deg.select(F.col("mid").alias("y"), F.col("deg").alias("deg_y"))
     return (
@@ -317,35 +463,17 @@ def k_core(
     than expected (tests verify the loop exits at cascade depth, not
     at ``rounds`` — the gate graph converges in 3).
     """
-    from datafusion_gpu_spark.operators.util import lineage_truncator
-
-    ckpt = lineage_truncator(edges.sparkSession.sparkContext)
-    lo = F.least(F.col(a), F.col(b)).alias("lo")
-    hi = F.greatest(F.col(a), F.col(b)).alias("hi")
-    e = ckpt(edges.select(lo, hi).where(F.col("lo") != F.col("hi")).distinct())
+    ckpt = util.lineage_truncator(edges.sparkSession.sparkContext)
+    e = ckpt(_canonical(edges, a, b))
     n_edges = e.count()
     for _ in range(rounds):
-        deg = (
-            e.select(F.col("lo").alias("node"))
-            .unionAll(e.select(F.col("hi").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
-        keep = deg.where(F.col("deg") >= k).select("node")
-        e = ckpt(
-            e.join(keep.withColumnRenamed("node", "lo"), "lo", "left_semi")
-            .join(keep.withColumnRenamed("node", "hi"), "hi", "left_semi")
-        )
+        keep = _degree(e, "deg").where(F.col("deg") >= k).select("node")
+        e = ckpt(_keep_edges(e, keep, "lo", "hi"))
         remaining = e.count()
         if remaining == n_edges:
             break  # monotone: nothing removed => exact k-core reached
         n_edges = remaining
-    deg = (
-        e.select(F.col("lo").alias("node"))
-        .unionAll(e.select(F.col("hi").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
+    deg = _degree(e, "degree")
     return deg.where(F.col("degree") >= k)
 
 
@@ -354,15 +482,7 @@ def degree_histogram(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
     first diagnostic anyone runs on a link graph (power-law check,
     skew estimate for join planning). Two keyed aggregations; the
     histogram is at most |V| rows and usually tiny."""
-    lo = F.least(F.col(a), F.col(b)).alias("lo")
-    hi = F.greatest(F.col(a), F.col(b)).alias("hi")
-    und = edges.select(lo, hi).where(F.col("lo") != F.col("hi")).distinct()
-    deg = (
-        und.select(F.col("lo").alias("node"))
-        .unionAll(und.select(F.col("hi").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
+    deg = _degree(_canonical(edges, a, b), "degree")
     return deg.groupBy("degree").agg(F.count(F.lit(1)).alias("n_nodes"))
 
 
@@ -391,33 +511,10 @@ def bfs_distances(
     and ends the loop at the graph's true eccentricity instead of
     paying the full ``rounds`` bound (same contract as k_core).
     """
-    from datafusion_gpu_spark.operators.util import lineage_truncator
-
-    ckpt = lineage_truncator(edges.sparkSession.sparkContext)
-    fwd = edges.select(F.col(a).alias("s"), F.col(b).alias("d"))
-    rev = edges.select(F.col(b).alias("s"), F.col(a).alias("d"))
-    adj = ckpt(fwd.unionAll(rev).where(F.col("s") != F.col("d")).distinct())
-
-    node = seeds.columns[0]
-    visited = ckpt(
-        seeds.select(F.col(node).alias("node"))
-        .distinct()
-        .withColumn("dist", F.lit(0))
-    )
-    frontier = visited.select("node")
-    for depth in range(1, rounds + 1):
-        nxt = ckpt(
-            adj.join(frontier.withColumnRenamed("node", "s"), "s")
-            .select(F.col("d").alias("node"))
-            .distinct()
-            .join(visited, "node", "left_anti")
-            .withColumn("dist", F.lit(depth))
-        )
-        if nxt.isEmpty():
-            break
-        visited = ckpt(visited.unionAll(nxt))
-        frontier = nxt.select("node")
-    return visited
+    ckpt = util.lineage_truncator(edges.sparkSession.sparkContext)
+    adj = ckpt(_symmetric(edges, a, b))
+    visited = ckpt(_seed_nodes(seeds).withColumn("dist", F.lit(0)))
+    return _frontier_bfs(adj, visited, ["node"], rounds, ckpt)
 
 
 def all_pairs_distances(
@@ -434,32 +531,15 @@ def all_pairs_distances(
     Same frontier mechanics as :func:`bfs_distances` (adjacency
     materialized once, per-round checkpoint truncation, empty-frontier
     early stop), keyed by (src, node)."""
-    from datafusion_gpu_spark.operators.util import lineage_truncator
-
-    ckpt = lineage_truncator(edges.sparkSession.sparkContext)
-    fwd = edges.select(F.col(a).alias("s"), F.col(b).alias("d"))
-    rev = edges.select(F.col(b).alias("s"), F.col(a).alias("d"))
-    adj = ckpt(fwd.unionAll(rev).where(F.col("s") != F.col("d")).distinct())
+    ckpt = util.lineage_truncator(edges.sparkSession.sparkContext)
+    adj = ckpt(_symmetric(edges, a, b))
     nodes = adj.select(F.col("s").alias("node")).distinct()
     visited = ckpt(
         nodes.select(
             F.col("node").alias("src"), "node", F.lit(0).alias("dist")
         )
     )
-    frontier = visited.select("src", "node")
-    for depth in range(1, max_dist + 1):
-        nxt = ckpt(
-            adj.join(frontier.withColumnRenamed("node", "s"), "s")
-            .select("src", F.col("d").alias("node"))
-            .distinct()
-            .join(visited, ["src", "node"], "left_anti")
-            .withColumn("dist", F.lit(depth))
-        )
-        if nxt.isEmpty():
-            break
-        visited = ckpt(visited.unionAll(nxt))
-        frontier = nxt.select("src", "node")
-    return visited
+    return _frontier_bfs(adj, visited, ["src", "node"], max_dist, ckpt)
 
 
 def harmonic_exact(
@@ -507,12 +587,8 @@ def harmonic_hyperball(
     Estimate clamping: F.greatest(growth, 0) guards the counter against
     the (tiny, bias-correction) non-monotonicity HLL++ estimates can
     show even over monotone registers."""
-    from datafusion_gpu_spark.operators.util import lineage_truncator
-
-    ckpt = lineage_truncator(edges.sparkSession.sparkContext)
-    fwd = edges.select(F.col(a).alias("s"), F.col(b).alias("d"))
-    rev = edges.select(F.col(b).alias("s"), F.col(a).alias("d"))
-    adj = ckpt(fwd.unionAll(rev).where(F.col("s") != F.col("d")).distinct())
+    ckpt = util.lineage_truncator(edges.sparkSession.sparkContext)
+    adj = ckpt(_symmetric(edges, a, b))
     state = ckpt(
         adj.select(F.col("s").alias("node"))
         .distinct()
@@ -582,27 +658,13 @@ def personalized_pagerank(
     table is never re-shuffled after setup, rounds are
     checkpoint-truncated.
     """
-    from datafusion_gpu_spark.operators.util import lineage_truncator
-
-    ckpt = lineage_truncator(edges.sparkSession.sparkContext)
-    e = ckpt(
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    )
-    nodes_deg = ckpt(
-        e.select(F.col("src").alias("node"), F.lit(1).alias("out"))
-        .unionAll(e.select(F.col("dst").alias("node"), F.lit(0).alias("out")))
-        .groupBy("node")
-        .agg(F.sum("out").cast("double").alias("outdeg"))
-    )
+    ckpt = util.lineage_truncator(edges.sparkSession.sparkContext)
+    e, nodes_deg = _pagerank_edges(edges, src, dst, ckpt)
     # Restrict seeds to graph nodes BEFORE counting |S|: a seed absent
     # from the edge list can receive no teleport mass (p_rel is built on
     # nodes_deg), so normalizing by the unrestricted count would silently
     # leak 1/|S| per missing seed and ranks would under-sum.
-    seed_nodes = (
-        seeds.select(F.col(seeds.columns[0]).alias("node"))
-        .distinct()
-        .join(nodes_deg.select("node"), "node", "semi")
-    )
+    seed_nodes = _seed_nodes(seeds).join(nodes_deg.select("node"), "node", "semi")
     ns_row = F.broadcast(
         seed_nodes.agg(F.count(F.lit(1)).cast("double").alias("ns"))
     )
@@ -617,16 +679,7 @@ def personalized_pagerank(
     )
     ranks = p_rel.select("node", F.col("p").alias("rank"))
     for _ in range(iterations):
-        rank_w = (
-            ranks.join(nodes_deg, "node")
-            .where(F.col("outdeg") > 0)
-            .select("node", (F.col("rank") / F.col("outdeg")).alias("rw"))
-        )
-        contribs = (
-            e.join(F.broadcast(rank_w), e["src"] == rank_w["node"])
-            .groupBy("dst")
-            .agg(F.sum("rw").alias("contrib"))
-        )
+        contribs = _pagerank_contribs(e, nodes_deg, ranks, F.broadcast)
         ranks = ckpt(
             p_rel.join(
                 F.broadcast(contribs), p_rel["node"] == contribs["dst"], "left"
@@ -639,6 +692,12 @@ def personalized_pagerank(
             )
         )
     return ranks
+
+
+def _min_cost(dist: DataFrame, cand: DataFrame) -> DataFrame:
+    """Relaxation merge: ``(node, cost)`` labels of ``dist`` and ``cand``,
+    keeping each node's minimum cost."""
+    return dist.unionAll(cand).groupBy("node").agg(F.min("cost").alias("cost"))
 
 
 def bellman_ford(
@@ -673,18 +732,9 @@ def bellman_ford(
     check already collects (no extra jobs); the delta-stepping A/B
     probe reads it.
     """
-    from datafusion_gpu_spark.operators.util import lineage_truncator
-
-    ckpt = lineage_truncator(edges.sparkSession.sparkContext)
-    fwd = edges.select(F.col(a).alias("s"), F.col(b).alias("d"), F.col(w).alias("w"))
-    rev = edges.select(F.col(b).alias("s"), F.col(a).alias("d"), F.col(w).alias("w"))
-    adj = ckpt(fwd.unionAll(rev).where(F.col("s") != F.col("d")).distinct())
-    node = seeds.columns[0]
-    dist = ckpt(
-        seeds.select(F.col(node).alias("node"))
-        .distinct()
-        .withColumn("cost", F.lit(0).cast("long"))
-    )
+    ckpt = util.lineage_truncator(edges.sparkSession.sparkContext)
+    adj = ckpt(_symmetric(edges, a, b, w))
+    dist = ckpt(_seed_nodes(seeds).withColumn("cost", F.lit(0).cast("long")))
     stats = dist.agg(
         F.count(F.lit(1)).alias("n"), F.coalesce(F.sum("cost"), F.lit(0)).alias("s")
     ).collect()[0]
@@ -696,9 +746,7 @@ def bellman_ford(
         cand = adj.join(dist.withColumnRenamed("node", "s"), "s").select(
             F.col("d").alias("node"), (F.col("cost") + F.col("w")).alias("cost")
         )
-        dist = ckpt(
-            dist.unionAll(cand).groupBy("node").agg(F.min("cost").alias("cost"))
-        )
+        dist = ckpt(_min_cost(dist, cand))
         stats = dist.agg(
             F.count(F.lit(1)).alias("n"),
             F.coalesce(F.sum("cost"), F.lit(0)).alias("s"),
@@ -791,15 +839,13 @@ def louvain(
     monotone-Q + planted-floor contract instead (the
     agg_approx_error_bounded pattern).
     """
-    from datafusion_gpu_spark.operators.util import lineage_truncator
-
     # reset_stats: each round references the previous assignment in
     # several join branches, so preserved checkpoint statistics compound
     # geometrically and stall the planner in BigInt arithmetic after a
     # dozen rounds (see util.stats_barrier); every join this operator
     # wants broadcast carries an explicit hint, so losing auto-broadcast
     # costs nothing
-    ckpt = lineage_truncator(edges.sparkSession.sparkContext, reset_stats=True)
+    ckpt = util.lineage_truncator(edges.sparkSession.sparkContext, reset_stats=True)
     wcol = F.col(weight).cast("double") if weight else F.lit(1.0)
     und = edges.select(
         F.least(F.col(a), F.col(b)).alias("i"),
@@ -998,20 +1044,11 @@ def delta_stepping(
     collecting it turns the emptiness probe into a count, so leave it
     None in production.
     """
-    from datafusion_gpu_spark.operators.util import lineage_truncator
-
-    ckpt = lineage_truncator(edges.sparkSession.sparkContext)
-    fwd = edges.select(F.col(a).alias("s"), F.col(b).alias("d"), F.col(w).alias("w"))
-    rev = edges.select(F.col(b).alias("s"), F.col(a).alias("d"), F.col(w).alias("w"))
-    adj = ckpt(fwd.unionAll(rev).where(F.col("s") != F.col("d")).distinct())
+    ckpt = util.lineage_truncator(edges.sparkSession.sparkContext)
+    adj = ckpt(_symmetric(edges, a, b, w))
     light = ckpt(adj.where(F.col("w") <= delta))
     heavy = ckpt(adj.where(F.col("w") > delta))
-    node = seeds.columns[0]
-    dist = ckpt(
-        seeds.select(F.col(node).alias("node"))
-        .distinct()
-        .withColumn("cost", F.lit(0).cast("long"))
-    )
+    dist = ckpt(_seed_nodes(seeds).withColumn("cost", F.lit(0).cast("long")))
 
     def relax(frontier: DataFrame, rel: DataFrame, cur: DataFrame):
         """Candidates one hop from ``frontier`` through ``rel`` that
@@ -1043,11 +1080,7 @@ def delta_stepping(
             elif not frontier.take(1):
                 break
             improved = relax(frontier, light, dist)
-            dist = ckpt(
-                dist.unionAll(improved)
-                .groupBy("node")
-                .agg(F.min("cost").alias("cost"))
-            )
+            dist = ckpt(_min_cost(dist, improved))
             # only improvements that landed INSIDE the bucket re-relax;
             # the rest wait for their own bucket
             frontier = improved.where(in_bucket)
@@ -1068,9 +1101,7 @@ def delta_stepping(
             work["relaxed_rows"] = work.get("relaxed_rows", 0) + nb
             work["rounds"] = work.get("rounds", 0) + 1
         improved = relax(bucket_nodes, heavy, dist)
-        dist = ckpt(
-            dist.unionAll(improved).groupBy("node").agg(F.min("cost").alias("cost"))
-        )
+        dist = ckpt(_min_cost(dist, improved))
         top = dist.agg(F.max("cost").alias("mx")).first()["mx"]
         if top is not None and top < hi:
             break  # every label below the next bucket floor: all settled
@@ -1113,38 +1144,11 @@ def resource_allocation(
     gate spelling (AA is a one-line weight swap for library callers who
     accept contract-style checking).
     """
-    from datafusion_gpu_spark.operators.util import lineage_truncator
-
-    ckpt = lineage_truncator(edges.sparkSession.sparkContext)
-    lo = F.least(F.col(a), F.col(b)).alias("lo")
-    hi = F.greatest(F.col(a), F.col(b)).alias("hi")
-    und = ckpt(
-        edges.select(lo, hi).where(F.col("lo") != F.col("hi")).distinct()
-    )
-    adj = und.select(
-        F.col("lo").alias("mid"), F.col("hi").alias("nbr")
-    ).unionAll(und.select(F.col("hi").alias("mid"), F.col("lo").alias("nbr")))
-    deg = ckpt(adj.groupBy("mid").agg(F.count(F.lit(1)).alias("deg")))
     # nano-unit weight of each SMALL middle; full degree in the discount
-    w_mid = deg.where(F.col("deg") <= max_degree).select(
-        "mid",
-        F.round(F.lit(1e9) / F.col("deg")).cast("long").alias("w"),
-    )
-    small_mid = adj.join(F.broadcast(w_mid), "mid")
-    x = small_mid.select("mid", "w", F.col("nbr").alias("x"))
-    y = small_mid.select(F.col("mid").alias("mid2"), F.col("nbr").alias("y"))
-    pairs = (
-        x.join(y, x["mid"] == y["mid2"])
-        .where(F.col("x") < F.col("y"))
-        .groupBy("x", "y")
-        .agg(
-            F.count(F.lit(1)).alias("common"),
-            F.sum("w").alias("ra_units"),
-        )
-        .where(F.col("common") >= min_common)
-    )
-    pairs = pairs.join(
-        und, (pairs["x"] == und["lo"]) & (pairs["y"] == und["hi"]), "left_anti"
+    pairs, _ = _capped_wedges(
+        edges, a, b, max_degree, min_common,
+        mid_cols=(F.round(F.lit(1e9) / F.col("deg")).cast("long").alias("w"),),
+        aggs=(F.sum("w").alias("ra_units"),),
     )
     return pairs.select(
         F.col("x").alias("a"),
@@ -1202,19 +1206,9 @@ def strongly_connected_components(
     Returns (node, scc_id) with scc_id = min member id, the canonical
     labeling the oracle's mutual-reachability closure replays.
     """
-    from datafusion_gpu_spark.operators.util import lineage_truncator
-
-    ckpt = lineage_truncator(edges.sparkSession.sparkContext, reset_stats=True)
-    e = ckpt(
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .where(F.col("s") != F.col("d"))
-        .distinct()
-    )
-    nodes = ckpt(
-        e.select(F.col("s").alias("node"))
-        .unionAll(e.select(F.col("d").alias("node")))
-        .distinct()
-    )
+    ckpt = util.lineage_truncator(edges.sparkSession.sparkContext, reset_stats=True)
+    e = ckpt(_directed(edges, src, dst))
+    nodes = ckpt(_endpoints(e, "s", "d"))
     n_remaining = nodes.count()
     assigned: list[DataFrame] = []
 
@@ -1241,11 +1235,7 @@ def strongly_connected_components(
                 )
             )
             nodes = core
-            e = ckpt(
-                e.join(nodes.withColumnRenamed("node", "s"), "s", "left_semi").join(
-                    nodes.withColumnRenamed("node", "d"), "d", "left_semi"
-                )
-            )
+            e = ckpt(_keep_edges(e, nodes, "s", "d"))
             n_remaining = n_core
         if n_remaining == 0:
             break
@@ -1307,20 +1297,13 @@ def strongly_connected_components(
         # 4. peel the finished SCCs
         assigned.append(ckpt(reached.select("node", F.col("color").alias("scc_id"))))
         nodes = ckpt(nodes.join(reached, "node", "left_anti"))
-        e = ckpt(
-            e.join(nodes.withColumnRenamed("node", "s"), "s", "left_semi").join(
-                nodes.withColumnRenamed("node", "d"), "d", "left_semi"
-            )
-        )
+        e = ckpt(_keep_edges(e, nodes, "s", "d"))
         n_remaining -= n_reached
     if n_remaining != 0:
         raise RuntimeError("scc: outer peeling budget exhausted")
     if not assigned:  # edgeless input
         return nodes.select("node", F.col("node").alias("scc_id"))
-    out = assigned[0]
-    for part in assigned[1:]:
-        out = out.unionAll(part)
-    return out.select("node", "scc_id")
+    return functools.reduce(DataFrame.unionAll, assigned).select("node", "scc_id")
 
 
 def topo_layers(
@@ -1347,19 +1330,9 @@ def topo_layers(
     combined with the raise-free path, this IS the distributed cycle
     detector; run SCC first when the input may legitimately cycle.
     """
-    from datafusion_gpu_spark.operators.util import lineage_truncator
-
-    ckpt = lineage_truncator(edges.sparkSession.sparkContext)
-    e = ckpt(
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .where(F.col("s") != F.col("d"))
-        .distinct()
-    )
-    remaining = ckpt(
-        e.select(F.col("s").alias("node"))
-        .unionAll(e.select(F.col("d").alias("node")))
-        .distinct()
-    )
+    ckpt = util.lineage_truncator(edges.sparkSession.sparkContext)
+    e = ckpt(_directed(edges, src, dst))
+    remaining = ckpt(_endpoints(e, "s", "d"))
     n_remaining = remaining.count()
     layers: list[DataFrame] = []
     for rnd in range(max_rounds):
@@ -1386,10 +1359,7 @@ def topo_layers(
         raise RuntimeError("topo_layers: round budget exhausted")
     if not layers:
         return remaining.withColumn("layer", F.lit(0))
-    out = layers[0]
-    for part in layers[1:]:
-        out = out.unionAll(part)
-    return out.select("node", "layer")
+    return functools.reduce(DataFrame.unionAll, layers).select("node", "layer")
 
 
 def boruvka_mst(
@@ -1429,10 +1399,7 @@ def boruvka_mst(
 
     Returns canonical MST edges (lo, hi, w).
     """
-    from datafusion_gpu_spark.operators.dedup import connected_components
-    from datafusion_gpu_spark.operators.util import lineage_truncator
-
-    ckpt = lineage_truncator(edges.sparkSession.sparkContext, reset_stats=True)
+    ckpt = util.lineage_truncator(edges.sparkSession.sparkContext, reset_stats=True)
     und = ckpt(
         edges.select(
             F.least(F.col(a), F.col(b)).alias("lo"),
@@ -1443,12 +1410,7 @@ def boruvka_mst(
         .groupBy("lo", "hi")
         .agg(F.min("w").alias("w"))
     )
-    comp = ckpt(
-        und.select(F.col("lo").alias("node"))
-        .unionAll(und.select(F.col("hi").alias("node")))
-        .distinct()
-        .withColumn("comp", F.col("node"))
-    )
+    comp = ckpt(_endpoints(und, "lo", "hi").withColumn("comp", F.col("node")))
     forest: list[DataFrame] = []
     for _ in range(max_rounds):
         cl = comp.select(F.col("node").alias("lo"), F.col("comp").alias("c_lo"))
@@ -1492,10 +1454,7 @@ def boruvka_mst(
         raise RuntimeError("boruvka_mst: round budget exhausted")
     if not forest:
         return und.where(F.lit(False))
-    out = forest[0]
-    for part in forest[1:]:
-        out = out.unionAll(part)
-    return out.distinct()
+    return functools.reduce(DataFrame.unionAll, forest).distinct()
 
 
 def local_clustering(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
@@ -1518,40 +1477,7 @@ def local_clustering(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
 
     Returns (node, deg, n_tri, lcc).
     """
-    from datafusion_gpu_spark.operators.util import lineage_truncator
-
-    ckpt = lineage_truncator(edges.sparkSession.sparkContext)
-    lo = F.least(F.col(a), F.col(b)).alias("lo")
-    hi = F.greatest(F.col(a), F.col(b)).alias("hi")
-    und = ckpt(edges.select(lo, hi).where(F.col("lo") != F.col("hi")).distinct())
-    deg = (
-        und.select(F.col("lo").alias("node"))
-        .unionAll(und.select(F.col("hi").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    dl = deg.select(F.col("node").alias("lo"), F.col("deg").alias("deg_lo"))
-    dh = deg.select(F.col("node").alias("hi"), F.col("deg").alias("deg_hi"))
-    lo_first = (F.col("deg_lo") < F.col("deg_hi")) | (
-        (F.col("deg_lo") == F.col("deg_hi")) & (F.col("lo") < F.col("hi"))
-    )
-    oriented = ckpt(
-        und.join(dl, "lo")
-        .join(dh, "hi")
-        .select(
-            F.when(lo_first, F.col("lo")).otherwise(F.col("hi")).alias("u"),
-            F.when(lo_first, F.col("hi")).otherwise(F.col("lo")).alias("v"),
-        )
-    )
-    e1 = oriented.select(F.col("u"), F.col("v"))
-    e2 = oriented.select(F.col("u").alias("u2"), F.col("v").alias("w"))
-    wedges = (
-        e1.join(e2, e1["u"] == e2["u2"])
-        .where(F.col("v") != F.col("w"))
-        .select("u", "v", "w")
-    )
-    closing = oriented.select(F.col("u").alias("v"), F.col("v").alias("w"))
-    closed = wedges.join(closing, ["v", "w"], "inner")
+    closed, deg = _closed_triangles(edges, a, b)
     corners = closed.select(
         F.explode(F.array(F.col("u"), F.col("v"), F.col("w"))).alias("node")
     )
@@ -1596,17 +1522,8 @@ def label_propagation(
 
     Returns (node, label) after ``rounds`` synchronous rounds.
     """
-    from datafusion_gpu_spark.operators.util import lineage_truncator
-
-    ckpt = lineage_truncator(edges.sparkSession.sparkContext)
-    lo = F.least(F.col(a), F.col(b)).alias("lo")
-    hi = F.greatest(F.col(a), F.col(b)).alias("hi")
-    und = edges.select(lo, hi).where(F.col("lo") != F.col("hi")).distinct()
-    nbr = ckpt(
-        und.select(F.col("lo").alias("node"), F.col("hi").alias("nb")).unionAll(
-            und.select(F.col("hi").alias("node"), F.col("lo").alias("nb"))
-        )
-    )
+    ckpt = util.lineage_truncator(edges.sparkSession.sparkContext)
+    nbr = ckpt(_both_ways(_canonical(edges, a, b), "node", "nb"))
     labels = ckpt(
         nbr.select("node").distinct().withColumn("label", F.col("node"))
     )
@@ -1655,12 +1572,7 @@ def degree_assortativity(
     expression (products in double, one IEEE sqrt), rounded to 6 — the
     same terminal-floats-only contract as the autocorr/Spearman family.
     """
-    lo = F.least(F.col(a), F.col(b)).alias("lo")
-    hi = F.greatest(F.col(a), F.col(b)).alias("hi")
-    und = edges.select(lo, hi).where(F.col("lo") != F.col("hi")).distinct()
-    both = und.select(
-        F.col("lo").alias("u"), F.col("hi").alias("v")
-    ).unionAll(und.select(F.col("hi").alias("u"), F.col("lo").alias("v")))
+    both = _both_ways(_canonical(edges, a, b), "u", "v")
     deg = both.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     du = deg.select(F.col("u").alias("__u__"), F.col("d").alias("dx"))
     dv = deg.select(F.col("u").alias("__v__"), F.col("d").alias("dy"))
@@ -1723,16 +1635,7 @@ def hits(
 
     Returns (side, node, raw, score): side in ('hub', 'authority').
     """
-    from datafusion_gpu_spark.operators.util import scale_truncator
-
-    # Reuse-vs-recompute gate (r16): the deduplicated edge list is
-    # reliably checkpointed only on the cluster path (checkpoint dir
-    # configured) where each of the 2k join branches would otherwise
-    # re-run the upstream edge construction; identity in local mode,
-    # where the r15 driver bench measured the eager cut +15% at sf0.1
-    # (extra synchronous job + pinned blocks > the broadcast-join
-    # re-execution it removes), and nothing pins an RDD after return.
-    ckpt = scale_truncator(edges.sparkSession.sparkContext)
+    ckpt = util.scale_truncator(edges.sparkSession.sparkContext)
     e = ckpt(edges.select(src, dst).distinct())
     h = (
         e.select(F.col(src).alias("node"))
@@ -1790,15 +1693,8 @@ def partition_modularity(
     Returns (community, n_nodes, internal_edges, degree_sum,
     contribution) — SUM(contribution) is Q.
     """
-    lo = F.least(F.col(a), F.col(b)).alias("lo")
-    hi = F.greatest(F.col(a), F.col(b)).alias("hi")
-    und = edges.select(lo, hi).where(F.col("lo") != F.col("hi")).distinct()
-    deg = (
-        und.select(F.col("lo").alias("node"))
-        .unionAll(und.select(F.col("hi").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("d"))
-    )
+    und = _canonical(edges, a, b)
+    deg = _degree(und, "d")
     comm = (
         labels.join(deg, "node")
         .groupBy("label")

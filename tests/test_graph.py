@@ -91,6 +91,23 @@ def test_pagerank_redistribute_conserves_mass_and_matches_numpy(spark):
         assert got[node] == pytest.approx(rank[idx[node]], abs=1e-12)
 
 
+def test_pagerank_bad_dangling_fails_before_any_job(spark):
+    # the argument check precedes the eager setup checkpoints, so a typo
+    # costs no Spark job
+    import uuid
+
+    edges = spark.createDataFrame([("a", "b"), ("b", "a")], "src string, dst string")
+    sc = spark.sparkContext
+    group = f"pagerank-bad-dangling-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "pagerank dangling argument check")
+    try:
+        with pytest.raises(ValueError, match="dangling"):
+            pagerank(edges, dangling="bogus")
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc._jsc.clearJobGroup()
+
+
 def test_merge_upsert_update_insert_passthrough_and_null_update(spark):
     from datafusion_gpu_spark.operators.layout import merge_upsert
 

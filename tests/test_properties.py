@@ -527,3 +527,71 @@ def test_scc_matches_closure_reference(spark, edges):
         for n in nodes
     }
     assert got == ref
+
+
+@settings(**_SETTINGS)
+@given(
+    edges=st.lists(
+        st.tuples(st.integers(0, 9), st.integers(0, 9)), min_size=1, max_size=20
+    ),
+    loops=st.lists(st.integers(0, 9), max_size=3),
+)
+def test_undirected_operators_ignore_orientation_duplicates_and_loops(
+    spark, edges, loops
+):
+    # every undirected operator first reduces its input to one canonical
+    # edge set, so reversing or duplicating edges and adding self-loops
+    # cannot change any answer; that reduction happens before the first
+    # round, so one round each is enough to see it
+    from datafusion_gpu_spark.operators.graph import (
+        bfs_distances,
+        degree_histogram,
+        k_core,
+    )
+
+    seeds = spark.createDataFrame([(edges[0][0],)], "node long")
+
+    def run(rows):
+        df = spark.createDataFrame(rows, "a long, b long")
+        return [
+            sorted(tuple(r) for r in op.collect())
+            for op in (
+                degree_histogram(df),
+                k_core(df, k=2, rounds=1),
+                bfs_distances(df, seeds, rounds=1),
+            )
+        ]
+
+    noisy = [(b, a) for a, b in edges] + edges + [(n, n) for n in loops]
+    assert run(edges) == run(noisy)
+
+
+@settings(**_SETTINGS)
+@given(
+    edges=st.lists(
+        st.tuples(st.integers(0, 9), st.integers(0, 9)).filter(
+            lambda p: p[0] != p[1]
+        ),
+        min_size=1,
+        max_size=20,
+    ),
+    picks=st.lists(st.integers(0, 19), min_size=1, max_size=3),
+)
+def test_bfs_equals_min_over_all_pairs_sources(spark, edges, picks):
+    # multi-source BFS is the per-node minimum of the all-pairs distances
+    # over the seed sources, under the same hop horizon
+    from datafusion_gpu_spark.operators.graph import (
+        all_pairs_distances,
+        bfs_distances,
+    )
+
+    nodes = sorted({n for e in edges for n in e})
+    seeds = {nodes[i % len(nodes)] for i in picks}
+    df = spark.createDataFrame(edges, "a long, b long")
+    sdf = spark.createDataFrame([(s,) for s in seeds], "node long")
+    got = {r.node: r.dist for r in bfs_distances(df, sdf, rounds=2).collect()}
+    want: dict = {}
+    for r in all_pairs_distances(df, max_dist=2).collect():
+        if r.src in seeds:
+            want[r.node] = min(want.get(r.node, r.dist), r.dist)
+    assert got == want
